@@ -64,8 +64,8 @@ object Components {
     // drives the loop (exact under task retries — a retried task can
     // re-add, inflating the count, but never fabricates a move from
     // zero); the WARN therefore reports the count as approximate.
-    val movedAcc = pairs.sparkSession.sparkContext
-      .longAccumulator("graft.components.moved")
+    // Each round registers its own accumulator: a reset one shared
+    // across rounds could take a late update from the round before.
     var iter = 0
     var changed = 1L
     while (iter < maxIter && changed > 0) {
@@ -83,11 +83,12 @@ object Components {
       // pointer jump: follow the label one hop (labels are node ids,
       // so every label has a row). Doubles effective propagation
       // distance per round.
+      val movedAcc = pairs.sparkSession.sparkContext
+        .longAccumulator(s"graft.components.moved.$iter")
       val probe = udf { (o: Long, c: Long) =>
         if (o != c) movedAcc.add(1L)
         true
       }.asNondeterministic() // must not be deduplicated or reordered
-      movedAcc.reset()
       val jumped = cut(prop
         .join(prop.select(col("id").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
         .select(col("id"), col("old"),

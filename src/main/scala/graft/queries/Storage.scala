@@ -1353,7 +1353,7 @@ object Storage {
     },
 
     // ---- read-optimized table: after a full compaction $ro serves the
-    // complete merged state from level>=1 only — identical answers,
+    // complete merged state from level 1 only — identical answers,
     // zero merge debt (reference: ReadOptimizedTable).
     QDef(
       "g55_read_optimized",

@@ -1037,12 +1037,12 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
         val nativeEligible = !gt.isPrimaryKeyTable &&
           entries.forall(e => e.file.dvFile.isEmpty && e.file.schemaId == sch.id) &&
           allParquet && !gt.hasColumnPatches(snapshot.filter(_ >= 0))
-        // a FULLY-COMPACTED pk table (one level>0 file per bucket, no
+        // a FULLY-COMPACTED pk table (one level-1 file per bucket, no
         // DVs) is already merged on disk: read raw through the native
         // scan, and report bucket partitioning so PK-PK joins between
         // identically-bucketed tables skip the shuffle
         val compactedPk = gt.isPrimaryKeyTable && entries.nonEmpty &&
-          entries.forall(e => e.file.level > 0 && e.file.dvFile.isEmpty &&
+          entries.forall(e => e.file.level == 1 && e.file.dvFile.isEmpty &&
             e.file.schemaId == sch.id) &&
           entries.groupBy(e => (e.partition, e.bucket)).forall(_._2.size <= 1) &&
           allParquet

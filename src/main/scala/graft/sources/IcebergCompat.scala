@@ -28,13 +28,15 @@ import scala.jdk.CollectionConverters._
   *    the same shape, IcebergCommitCallback.java:455-473
   *    createForDeleteFile), listed in a content=deletes manifest, so
   *    external readers see the post-delete state without compaction;
-  *  - primary-key tables: only fully-compacted (level >= 1) files —
+  *  - primary-key tables: only fully-compacted (level-1) files —
   *    one merged, tombstone-free generation per bucket, so a
   *    merge-unaware external reader still sees correct rows (the
   *    reference exposes maxLevel files for exactly this reason,
-  *    IcebergCommitCallback.java:734-741). When post-compaction
-  *    level-0 commits exist, the exported snapshot id/timestamp are
-  *    those of the COMPACT generation actually exposed — not the
+  *    IcebergCommitCallback.java:734-741). Partial compaction runs
+  *    (levels 2..N) may still hold -D rows and are never exposed. When
+  *    level-0 commits or partial runs sit above level 1, the exported
+  *    snapshot id/timestamp are those of the full compaction whose
+  *    generation is actually exposed — not the
   *    latest graft snapshot — and the staleness is recorded in the
   *    table properties (`graft.stale-behind-snapshot-id`), so an
   *    external reader is never told a stale state is current.
@@ -116,13 +118,14 @@ object IcebergCompat {
     val sch = t.schema
     val all = t.sm.liveEntries(latest)
     val isPk = sch.primaryKeys.nonEmpty
-    val exposed = if (!isPk) all else all.filter(_.file.level >= 1)
-    // PK staleness: with post-compaction level-0 commits, the exposed
-    // level>=1 state is the one the last COMPACT snapshot produced —
-    // stamp the export with THAT generation, not the latest snapshot
+    val exposed = if (!isPk) all else all.filter(_.file.level == 1)
+    // PK staleness: with level-0 commits or partial runs above it, the
+    // exposed level-1 state is the one the last full compaction
+    // produced — stamp the export with THAT generation, not the latest
+    // snapshot
     val exposedSnap: Snapshot =
-      if (isPk && all.exists(_.file.level == 0))
-        lastCompactSnapshot(t).getOrElse(latest)
+      if (isPk && all.exists(_.file.level != 1))
+        lastFullCompaction(t).getOrElse(latest)
       else latest
     val metaDir = new File(s"${t.path}/metadata")
     metaDir.mkdirs()
@@ -229,12 +232,12 @@ object IcebergCompat {
     Some(mdFile.getAbsolutePath)
   }
 
-  /** Latest snapshot with commitKind=COMPACT — the generation whose
-    * level>=1 output a PK export actually exposes. */
-  private def lastCompactSnapshot(t: GraftTable): Option[Snapshot] =
+  /** Latest full compaction — the generation whose level-1 output a
+    * PK export actually exposes. */
+  private def lastFullCompaction(t: GraftTable): Option[Snapshot] =
     t.sm.snapshotIds.reverseIterator
       .map(t.sm.snapshot)
-      .find(_.commitKind == graft.core.Meta.KindCompact)
+      .find(t.isFullCompaction)
 
   // ---------- external-reader walk (generic avro/json only) ----------
 

@@ -143,17 +143,20 @@ final class GraftTable private (
     // `full-compaction.delta-commits`: once N delta commits pile on
     // top of the last full compaction, trigger one (reference:
     // CoreOptions FULL_COMPACTION_DELTA_COMMITS — constantly triggered
-    // after delta commits). Guarded against re-entrancy: the compact's
-    // own COMPACT commit re-enters this hook and must not recurse.
+    // after delta commits). Partial compactions neither end the count
+    // nor add to it. Guarded against re-entrancy: the compact's own
+    // COMPACT commit re-enters this hook and must not recurse.
     schema.options.get("full-compaction.delta-commits")
       .map(_.toInt).filter(_ > 0).foreach { n =>
         val snap = sm.snapshot(committedId)
         if (!writeOnly && snap.commitKind != Meta.KindCompact &&
             !inAutoFullCompact.get()) {
-          // bounded walk: reads at most n snapshot files, newest-first
+          // bounded walk: reads n delta snapshots plus the partial
+          // compactions between them, newest-first
           val since = sm.snapshotIds.filter(_ <= committedId)
             .sorted.reverseIterator.map(sm.snapshot)
-            .takeWhile(_.commitKind != Meta.KindCompact).take(n).size
+            .takeWhile(s => !isFullCompaction(s))
+            .filter(_.commitKind != Meta.KindCompact).take(n).size
           if (since >= n) {
             inAutoFullCompact.set(true)
             try compact() finally inAutoFullCompact.set(false)
@@ -184,6 +187,17 @@ final class GraftTable private (
         }
       }
   }
+
+  /** Whether `s` is a compaction that left merged level-1 output: it
+    * wrote level 1, or wrote no partial level at all (an all-deleted
+    * bucket merges to nothing). A partial compaction writes only levels
+    * 2..N (see [[UniversalCompaction]]). */
+  private[graft] def isFullCompaction(s: Snapshot): Boolean =
+    s.commitKind == Meta.KindCompact && {
+      val added = s.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty)
+        .filter(_.kind == "ADD").map(_.file.level)
+      added.contains(1) || !added.exists(_ >= 2)
+    }
 
   /** re-entrancy latch for full-compaction.delta-commits (the COMPACT
     * commit fires the same onCommit hook) */
@@ -1578,16 +1592,14 @@ final class GraftTable private (
   private def commitFiles(
       out: DataFrame, sch: TableSchema, partitionBy: Seq[String],
       kind: String, seqBase: Long, commitIdentifier: Long,
-      deletes: Seq[ManifestEntry], level: Int = 0,
-      changelogManifest: Option[String] = None,
-      maxRecordsPerFile: Option[Long] = None): Long =
+      deletes: Seq[ManifestEntry], level: Int = 0): Long =
     commitFilesFn(out, sch, partitionBy, kind, seqBase, commitIdentifier,
-      _ => deletes, level, changelogManifest,
-      maxRecordsPerFile = maxRecordsPerFile)
+      _ => deletes, level)
 
   /** Shared two-phase write: stage parquet → move into table dir →
-    * commit ADDs (+ computed DELETEs). `level` > 0 marks fully-merged
-    * compaction output (enables the manifests-only COUNT fast path). */
+    * commit ADDs (+ computed DELETEs). `level` is the LSM level the
+    * files land on (see [[UniversalCompaction]]): 0 for commits, 1 for
+    * fully merged output (enables the manifests-only COUNT fast path). */
   private def commitFilesFn(
       out: DataFrame, sch: TableSchema, partitionBy: Seq[String],
       kind: String, seqBase: Long, commitIdentifier: Long,
@@ -1596,11 +1608,19 @@ final class GraftTable private (
       changelogManifest: Option[String] = None,
       dynIndexUpdate: Option[Seq[String] => Seq[String]] = None,
       globalIndexUpdate: Option[Seq[String] => Seq[String]] = None,
-      seqMax: Long = -1L,
-      /** roll output files at ~`target-file-size` (rows derived from a
-        * bytes/row estimate by the caller); None = Spark's default
-        * task-per-file layout */
-      maxRecordsPerFile: Option[Long] = None): Long = {
+      seqMax: Long = -1L): Long =
+    commitStagedDir(Seq(stageFiles(out, sch, partitionBy, level) -> level),
+      sch, kind, seqBase, commitIdentifier, deletesFor, changelogManifest,
+      dynIndexUpdate, globalIndexUpdate, seqMax)
+
+  /** First phase of a write: `out` as files of `level`'s format under a
+    * fresh staging directory, which is returned. `maxRecordsPerFile`
+    * rolls output files at ~`target-file-size` (rows derived from a
+    * bytes/row estimate by the caller); None = Spark's default
+    * task-per-file layout. */
+  private def stageFiles(
+      out: DataFrame, sch: TableSchema, partitionBy: Seq[String],
+      level: Int, maxRecordsPerFile: Option[Long] = None): String = {
     val staging = s"$path/staging/${UUID.randomUUID()}"
     // blob columns go out-of-line as part of the same write job
     val blobCols = graft.sources.BlobStorage.blobColumns(sch.options)
@@ -1644,9 +1664,7 @@ final class GraftTable private (
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .format(fmt).save(staging)
     }
-    commitStagedDir(staging, sch, kind, seqBase, commitIdentifier,
-      deletesFor, level, changelogManifest, dynIndexUpdate,
-      globalIndexUpdate, seqMax)
+    staging
   }
 
   /** Table files must store timestamps as annotated micros (INT96 has
@@ -1666,12 +1684,13 @@ final class GraftTable private (
   /** Second phase of a write: adopt already-staged parquet (partition
     * directory layout) into the table and commit. Also used by the
     * DSv2 row-level (COPY_ON_WRITE) write path, whose executors stage
-    * files through Spark's own parquet writer factory. */
+    * files through Spark's own parquet writer factory. `staged` pairs
+    * each staging directory with the level its files land on; all of
+    * them commit as one snapshot. */
   private[graft] def commitStagedDir(
-      staging: String, sch: TableSchema,
+      staged: Seq[(String, Int)], sch: TableSchema,
       kind: String, seqBase: Long, commitIdentifier: Long,
       deletesFor: Seq[ManifestEntry] => Seq[ManifestEntry],
-      level: Int = 0,
       changelogManifest: Option[String] = None,
       dynIndexUpdate: Option[Seq[String] => Seq[String]] = None,
       globalIndexUpdate: Option[Seq[String] => Seq[String]] = None,
@@ -1680,53 +1699,56 @@ final class GraftTable private (
         * and data rows at seqBase+1); -1 = same as seqBase. */
       seqMax: Long = -1L): Long = {
     val sMax = if (seqMax < 0) seqBase else seqMax
-    val stagingPath = Paths.get(staging)
-    val dataFiles0 = graft.core.FsUtil.walkAll(stagingPath).iterator
-      .filter(p => (p.toString.endsWith(".parquet") || p.toString.endsWith(".orc")
-        || p.toString.endsWith(".avro") || p.toString.endsWith(".lance"))
-        && Files.isRegularFile(p))
-      .toSeq
-    // avro/lance staged files are attempt-suffixed
-    // (part-<pid>-<attempt>.<ext>, renamed from tmp only on attempt
-    // success — AvroStorage/LanceStorage.writeStaged); when
-    // speculation/retry completes two attempts of the same partition,
-    // adopt exactly one (content is the same row set either way).
-    // Parquet/ORC staging goes through Spark's own committer, which
-    // already resolves attempts.
-    val AttemptRe = """part-(\d+)-(\d+)\.(avro|lance)""".r
-    val dataFiles = dataFiles0.groupBy { p =>
-      p.getFileName.toString match {
-        case AttemptRe(pid, _, ext) => (p.getParent.toString, s"$pid.$ext")
-        case other => (p.getParent.toString, other)
+    val moved = staged.flatMap { case (staging, level) =>
+      val stagingPath = Paths.get(staging)
+      val dataFiles0 = graft.core.FsUtil.walkAll(stagingPath).iterator
+        .filter(p => (p.toString.endsWith(".parquet") || p.toString.endsWith(".orc")
+          || p.toString.endsWith(".avro") || p.toString.endsWith(".lance"))
+          && Files.isRegularFile(p))
+        .toSeq
+      // avro/lance staged files are attempt-suffixed
+      // (part-<pid>-<attempt>.<ext>, renamed from tmp only on attempt
+      // success — AvroStorage/LanceStorage.writeStaged); when
+      // speculation/retry completes two attempts of the same partition,
+      // adopt exactly one (content is the same row set either way).
+      // Parquet/ORC staging goes through Spark's own committer, which
+      // already resolves attempts.
+      val AttemptRe = """part-(\d+)-(\d+)\.(avro|lance)""".r
+      val dataFiles = dataFiles0.groupBy { p =>
+        p.getFileName.toString match {
+          case AttemptRe(pid, _, ext) => (p.getParent.toString, s"$pid.$ext")
+          case other => (p.getParent.toString, other)
+        }
+      }.values.map(_.maxBy { p =>
+        // numeric attempt compare — lexicographic would rank attempt 9
+        // above 10, adopting an arbitrary rather than the latest attempt
+        p.getFileName.toString match {
+          case AttemptRe(_, attempt, _) => attempt.toLong
+          case _ => Long.MinValue
+        }
+      }).toSeq
+      // phase 1 (driver, metadata-only): adopt staged files into the
+      // table directory
+      val adopted = dataFiles.map { p =>
+        val rel = stagingPath.relativize(p).toString
+        val ext = rel.substring(rel.lastIndexOf('.') + 1)
+        val dirs = rel.split('/').dropRight(1)
+        val partition = dirs.filterNot(_.startsWith("__bucket="))
+          .map { d => val Array(k, v) = d.split("=", 2); k -> v }.toMap
+        val bucket = dirs.find(_.startsWith("__bucket="))
+          .map(_.stripPrefix("__bucket=").toInt).getOrElse(0)
+        // `data-file.prefix` (reference: CoreOptions DATA_FILE_PREFIX):
+        // operators grep/lifecycle-rule on file-name prefixes; uuid keeps
+        // names collision-free either way
+        val prefix = sch.options.getOrElse("data-file.prefix", "")
+        val targetRel = (dirs :+ s"$prefix${UUID.randomUUID()}.$ext").mkString("/")
+        val targetAbs = s"${sm.dataDir}/$targetRel"
+        sm.io.rename(p.toString, targetAbs)
+        (partition, bucket, targetAbs, s"data/$targetRel", level)
       }
-    }.values.map(_.maxBy { p =>
-      // numeric attempt compare — lexicographic would rank attempt 9
-      // above 10, adopting an arbitrary rather than the latest attempt
-      p.getFileName.toString match {
-        case AttemptRe(_, attempt, _) => attempt.toLong
-        case _ => Long.MinValue
-      }
-    }).toSeq
-    // phase 1 (driver, metadata-only): adopt staged files into the
-    // table directory
-    val moved = dataFiles.map { p =>
-      val rel = stagingPath.relativize(p).toString
-      val ext = rel.substring(rel.lastIndexOf('.') + 1)
-      val dirs = rel.split('/').dropRight(1)
-      val partition = dirs.filterNot(_.startsWith("__bucket="))
-        .map { d => val Array(k, v) = d.split("=", 2); k -> v }.toMap
-      val bucket = dirs.find(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toInt).getOrElse(0)
-      // `data-file.prefix` (reference: CoreOptions DATA_FILE_PREFIX):
-      // operators grep/lifecycle-rule on file-name prefixes; uuid keeps
-      // names collision-free either way
-      val prefix = sch.options.getOrElse("data-file.prefix", "")
-      val targetRel = (dirs :+ s"$prefix${UUID.randomUUID()}.$ext").mkString("/")
-      val targetAbs = s"${sm.dataDir}/$targetRel"
-      sm.io.rename(p.toString, targetAbs)
-      (partition, bucket, targetAbs, s"data/$targetRel")
+      deleteRecursive(stagingPath)
+      adopted
     }
-    deleteRecursive(stagingPath)
     // phase 2: footer stats (format-matched reader). Driver-serial IO
     // is fine for a handful of files but O(files) sequential reads on
     // a big backfill, so larger commits fan the footer reads out as
@@ -1735,11 +1757,12 @@ final class GraftTable private (
     val schId = sch.id
     // metadata.stats-mode / fields.<f>.stats-mode (+ per-level default
     // and keep-first-n): bound what the manifest stores per column
-    // (plain string map — executor-safe); every file in one staged
-    // commit shares `level`
-    val colModes = graft.core.StatsModes.columnModes(sch, level)
+    // (plain string maps, one per level — executor-safe)
+    val colModesOf = staged.map(_._2).distinct
+      .map(l => l -> graft.core.StatsModes.columnModes(sch, l)).toMap
     def statsOf(conf: org.apache.hadoop.conf.Configuration,
         abs: String, rel: String, lvl: Int, sb: Long, sx: Long): DataFileMeta = {
+      val colModes = colModesOf(lvl)
       val m =
         if (abs.endsWith(".orc")) OrcStats.read(conf, abs, rel, lvl, sb, sx)
         else if (abs.endsWith(".avro"))
@@ -1752,21 +1775,21 @@ final class GraftTable private (
     }
     val metas: Seq[DataFileMeta] =
       if (moved.size <= 16)
-        moved.map { case (_, _, abs, rel) =>
-          statsOf(hadoopConf, abs, rel, level, seqBase, sMax).copy(schemaId = schId)
+        moved.map { case (_, _, abs, rel, lvl) =>
+          statsOf(hadoopConf, abs, rel, lvl, seqBase, sMax).copy(schemaId = schId)
         }
       else {
         val conf = new SerializableHadoopConf(hadoopConf)
-        val (lvl, sb, sx) = (level, seqBase, sMax)
+        val (sb, sx) = (seqBase, sMax)
         spark.sparkContext
-          .parallelize(moved.map { case (_, _, abs, rel) => (abs, rel) },
+          .parallelize(moved.map { case (_, _, abs, rel, lvl) => (abs, rel, lvl) },
             math.min(moved.size, 32))
-          .map { case (abs, rel) =>
+          .map { case (abs, rel, lvl) =>
             statsOf(conf.value, abs, rel, lvl, sb, sx).copy(schemaId = schId)
           }
           .collect().toSeq
       }
-    val added = moved.zip(metas).map { case ((partition, bucket, _, _), meta) =>
+    val added = moved.zip(metas).map { case ((partition, bucket, _, _, _), meta) =>
       ManifestEntry("ADD", partition, bucket, meta)
     }
     val indexed = buildFileIndexes(sch, added)
@@ -2334,7 +2357,7 @@ final class GraftTable private (
       visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty))
     if (!isPrimaryKeyTable)
       Some(entries.map(e => e.file.rowCount - e.file.dvCardinality.getOrElse(0L)).sum)
-    else if (entries.forall(_.file.level > 0) &&
+    else if (entries.forall(_.file.level == 1) &&
       entries.groupBy(e => (e.partition, e.bucket)).forall(_._2.size <= 1))
       // fully compacted: one file per bucket, already merged, no deletes
       Some(entries.map(_.file.rowCount).sum)
@@ -2690,11 +2713,11 @@ final class GraftTable private (
       if (betterThan(sf, s, bestSf, bestSeq, best != null)) {
         best = row; bestSeq = s; bestSf = sf
       }
-    if (candidates.forall(_.file.rowCount <= lookupCacheMaxRows)) {
-      // cached path: decode each candidate file ONCE into a key→best
-      // map (immutable files, LRU-bounded), then probe by hash
-      val probe: Seq[Any] = keyInternal.toSeq
-      candidates.foreach { e =>
+    val probe: Seq[Any] = keyInternal.toSeq
+    candidates.foreach { e =>
+      if (e.file.rowCount <= lookupCacheMaxRows) {
+        // cached: decode the file ONCE into a key→best map (immutable
+        // files, LRU-bounded), then probe by hash
         val mapKey = s"${sch.id}/${e.file.fileName}"
         val fileMap = this.synchronized(Option(lookupMapCache.get(mapKey))) match {
           case Some(m) => lookupCacheHits.incrementAndGet(); m
@@ -2720,9 +2743,7 @@ final class GraftTable private (
             imm
         }
         fileMap.get(probe).foreach { case (row, s, sf, _) => offer(row, s, sf) }
-      }
-    } else candidates.foreach { e =>
-      scanFile(e) { row =>
+      } else scanFile(e) { row => // over the cap: stream
         var matches = true
         var i = 0
         while (i < keyOrds.length && matches) {
@@ -4005,71 +4026,40 @@ final class GraftTable private (
     else compactEntries(e => selected.contains(e.file.fileName))
   }
 
-  /** Incremental compaction: rewrite only the (partition, bucket)
-    * groups whose live file count exceeds `trigger` — bounded write
-    * amplification instead of a full rewrite (reference:
-    * UniversalCompaction's num-sorted-run trigger,
-    * CoreOptions num-sorted-run.compaction-trigger). No-op when every
-    * group is under the trigger. */
+  /** Incremental compaction: universal compaction of each
+    * (partition, bucket) that trips a trigger (reference:
+    * UniversalCompaction + MergeTreeCompactManager; see
+    * [[UniversalCompaction]] for the levels and the pick). A hot
+    * primary-key bucket merges its small newest runs into one run on
+    * levels 2..N and leaves the big level-1 run alone until the newer
+    * runs grow to its size or a rule needs a full merge, so write
+    * amplification stays bounded instead of every trigger rewriting the
+    * whole bucket. Append tables rewrite a triggered bucket whole. One
+    * COMPACT snapshot; no-op when every bucket is under its triggers. */
   def compactIfNeeded(trigger: Int = 5): Option[Long] = {
-    val sch = schema
     val snap = sm.latestSnapshot().getOrElse(return None)
-    // compaction.min.file-num (reference: CoreOptions
-    // COMPACTION_MIN_FILE_NUM) overrides the caller's count trigger;
-    // compaction.max-size-amplification-percent (universal compaction)
-    // additionally fires when un-merged bytes dwarf the merged state —
-    // a bucket fed by few HUGE level-0 runs compacts on size, not
-    // count: read amplification is bytes re-merged per read, and a
-    // count trigger alone would let 4 × 1 GB runs sit forever.
-    val minFiles = sch.options.get("compaction.min.file-num")
-      .map(_.toInt).getOrElse(trigger)
-    val ampPct = sch.options
-      .getOrElse("compaction.max-size-amplification-percent", "200").toLong
-    // num-sorted-run.compaction-trigger (reference: CoreOptions
-    // NUM_SORTED_RUNS_COMPACTION_TRIGGER): a sorted run is one level-0
-    // file or one populated level>0 — the merge-read fan-in. Opt-in
-    // here (the reference defaults to 5 because its reads always merge
-    // every run; this engine's count trigger already bounds fan-in).
-    val sortedRunTrigger =
-      sch.options.get("num-sorted-run.compaction-trigger").map(_.toInt)
-    // compaction.total-size-threshold (reference: universal compaction's
-    // small-bucket full merge — "if the total size ... is less than this
-    // threshold, full compaction will be triggered directly"): tiny
-    // fragmented buckets merge whole without waiting for count triggers
-    val totalSizeBelow = sch.options
-      .get("compaction.total-size-threshold").map(Meta.parseBytes)
-    // compaction.delete-ratio-threshold (reference default 0.2 in its
-    // DV mode): when deletion vectors hide this fraction of a bucket's
-    // rows, rewriting reclaims the space and drops the DV overhead
-    val deleteRatio = sch.options
-      .get("compaction.delete-ratio-threshold").map(_.toDouble)
-    val hot = sm.liveEntries(snap)
-      .groupBy(e => (e.partition, e.bucket))
-      .filter { case (_, es) =>
-        es.size > minFiles || sortedRunTrigger.exists { t =>
-          val runs = es.count(_.file.level == 0) +
-            es.filter(_.file.level > 0).map(_.file.level).distinct.size
-          runs >= t
-        } || totalSizeBelow.exists(th =>
-          es.size > 1 && es.map(_.file.fileSize).sum < th
-        ) || deleteRatio.exists { r =>
-          val rows = es.map(_.file.rowCount).sum
-          rows > 0 &&
-            es.map(_.file.dvCardinality.getOrElse(0L)).sum.toDouble / rows > r
-        } || {
-          val l0 = es.filter(_.file.level == 0).map(_.file.fileSize).sum
-          val merged = es.filter(_.file.level > 0).map(_.file.fileSize).sum
-          merged > 0 && l0 * 100 > merged * ampPct
-        }
-      }
-      .values.flatten.map(_.file.fileName).toSet
-    if (hot.isEmpty) None
+    val picks = compactionPicks(sm.liveEntries(snap), trigger).values.flatten.toSeq
+    if (picks.isEmpty) None
     // postpone tables: partial compaction of just the staged files
     // would create a second level-1 generation and break the
     // full-compaction changelog's before-state; visibility assignment
     // is always a FULL compact
     else if (schema.isPostponeBucket) compact()
-    else compactEntries(e => hot.contains(e.file.fileName))
+    else compactPicks(picks)
+  }
+
+  /** (partition, bucket) → what `compactIfNeeded(trigger)` does to it:
+    * the one decision `$compact_buckets` reports too. Files written
+    * under another bucket layout (mid-rescale) force a full merge: the
+    * rewrite re-routes their rows, so no run order holds for them. */
+  private def compactionPicks(entries: Seq[ManifestEntry], trigger: Int)
+      : Map[(Map[String, String], Int), Option[UniversalCompaction.Pick]] = {
+    val sch = schema
+    val policy = UniversalCompaction.policy(sch, trigger)
+    entries.groupBy(e => (e.partition, e.bucket)).map { case (k, es) =>
+      k -> UniversalCompaction.pick(es, policy,
+        forceFull = es.exists(bucketLayoutDiffers(sch, _)))
+    }
   }
 
   /** Record-level TTL (reference: RecordLevelExpire +
@@ -4098,52 +4088,30 @@ final class GraftTable private (
     }
 
   private def compactEntries(select: ManifestEntry => Boolean): Option[Long] = {
+    val snap = sm.latestSnapshot().getOrElse(return None)
+    compactPicks(Seq(UniversalCompaction.Pick(sm.liveEntries(snap).filter(select), 1)))
+  }
+
+  /** Rewrite each pick's files as one run on its output level, all in
+    * one COMPACT snapshot replacing the inputs. */
+  private def compactPicks(picks: Seq[UniversalCompaction.Pick]): Option[Long] = {
     // compaction rewrites files, which would re-position rows and break
     // the firstRowId + position identity (the reference likewise
     // restricts compaction on row-tracking tables)
     require(!rowTracking,
       "row-tracking tables cannot be compacted: rewriting files would reassign _ROW_ID")
-    val snap = sm.latestSnapshot().getOrElse(return None)
-    val old = sm.liveEntries(snap).filter(select)
+    val old = picks.flatMap(_.files)
     if (old.isEmpty) return None
     val sch = schema
     val base = nextSeq()
-    val merged =
-      if (isPrimaryKeyTable) {
-        val m0 = MergeEngine.mergeKeepMeta(readRaw(old), sch)
-          // -U winners are retractions too (see MergeEngine.merge) —
-          // rewriting one as +I would make the phantom row permanent
-          .filter(col(KindCol) =!= KindDelete &&
-            col(KindCol) =!= KindUpdateBefore)
-        // record-level TTL drops expired rows from the rewrite; with
-        // changelog-producer=full-compaction the state diff below then
-        // emits their -D rows, so incremental readers see the expiry
-        val m = recordExpireKeep(sch).map(m0.filter).getOrElse(m0)
-          .withColumn(KindCol, lit(KindInsert).cast("byte"))
-        if (sch.isDynamicBucket) {
-          // a key's bucket is index-assigned, not hash-derived: carry
-          // it through the rewrite (merge engines that drop __bucket
-          // get it re-joined from the raw rows)
-          val pk = sch.primaryKeys
-          if (m.columns.contains("__bucket")) m
-          else {
-            val bucketOf = readRaw(old)
-              .groupBy(pk.map(col).toIndexedSeq: _*)
-              .agg(max(col("__bucket")).as("__bucket"))
-            m.join(bucketOf, pk, "left")
-          }
-        } else m.withColumn("__bucket",
-          // postpone tables: compaction is WHERE bucket assignment
-          // happens — the staged bucket=-2 rows hash into
-          // postpone.default-bucket-num real buckets here (postpone
-          // forbids bucket-key, so bucketKeys = pk there; rescale of a
-          // bucket-key table re-routes by the SAME columns the writer
-          // used)
-          pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-            lit(sch.effectiveBuckets)).cast("int"))
-      } else readAppendData(old) // applies deletion vectors before rewrite
     val partitionBy =
       if (isPrimaryKeyTable) sch.partitionKeys :+ "__bucket" else sch.partitionKeys
+    // one write per output level: levels may differ in file format,
+    // codec and stats mode
+    val byLevel = picks.groupBy(_.outputLevel).toSeq.sortBy(_._1).map { case (level, ps) =>
+      val files = ps.flatMap(_.files)
+      (level, files, compactedRows(files, sch, full = level == 1))
+    }
     // changelog-producer=full-compaction: the compaction itself emits
     // the exact -U/+U/+I/-D rows accumulated since the PREVIOUS full
     // compaction — before = merged state of the level-1 inputs (last
@@ -4151,51 +4119,103 @@ final class GraftTable private (
     // readers then serve these rows with zero derivation (reference:
     // FullChangelogMergeTreeCompactRewriter +
     // FullChangelogMergeFunctionWrapper — top-level record vs merge
-    // result).
-    val producer = sch.changelogProducer
+    // result). Such tables only ever compact fully (see
+    // UniversalCompaction.policy), so the level-1 write holds every key.
+    val fullMerge = byLevel.collectFirst { case (1, files, rows) => (files, rows) }
     val changelog =
-      if (!isPrimaryKeyTable || producer != "full-compaction") None
-      else {
+      if (!isPrimaryKeyTable || sch.changelogProducer != "full-compaction") None
+      else fullMerge.flatMap { case (files, merged) =>
         merged.persist()
-        val compacted = old.filter(_.file.level >= 1)
         // level-1 files ARE the previous compaction's merged state:
         // one generation per (partition, bucket), keys unique within
         // it, deletes physically dropped — so the before-state is a
         // raw projection, no second full-table merge shuffle
-        val before = readRaw(compacted)
+        val before = readRaw(files.filter(_.file.level == 1))
           .select(struct.fieldNames.map(col).toIndexedSeq: _*)
         persistChangelog(
           stateDiff(before, merged.select(struct.fieldNames.map(col).toIndexedSeq: _*)),
           sch)
       }
-    // `target-file-size` (reference: CoreOptions TARGET_FILE_SIZE):
-    // compaction output rolls at ~the target — rows per file derived
-    // from the INPUTS' observed bytes/row, so the bound tracks the real
-    // data shape without a pre-pass. Level-0 ingest keeps Spark's
-    // task-per-file layout (one small commit = one file either way).
-    val rollAt = sch.options.get("target-file-size").map(Meta.parseBytes)
-      .map { t =>
-        val bytes = old.map(_.file.fileSize).sum
-        val rows = math.max(1L, old.map(_.file.rowCount).sum)
-        math.max(1L, t / math.max(1L, bytes / rows))
+    try {
+      val staged = byLevel.map { case (level, files, merged) =>
+        // `target-file-size` (reference: CoreOptions TARGET_FILE_SIZE):
+        // compaction output rolls at ~the target — rows per file derived
+        // from the INPUTS' observed bytes/row, so the bound tracks the
+        // real data shape without a pre-pass. Level-0 ingest keeps
+        // Spark's task-per-file layout (one small commit = one file
+        // either way).
+        val rollAt = sch.options.get("target-file-size").map(Meta.parseBytes)
+          .map { t =>
+            val bytes = files.map(_.file.fileSize).sum
+            val rows = math.max(1L, files.map(_.file.rowCount).sum)
+            math.max(1L, t / math.max(1L, bytes / rows))
+          }
+        // Co-locate each (partition, bucket) in one task before the
+        // staged write (r17, guide §6): `merged` otherwise keeps its
+        // upstream partitioning and partitionBy fans every task out
+        // across every bucket directory — up to tasks×buckets near-empty
+        // files per compaction (observed 32×8 at gate scale), which
+        // every later read pays as split count. Hash repartition on the
+        // partitionBy columns (no explicit N → AQE coalesces;
+        // deterministic under retry) yields one file per (partition,
+        // bucket) with rollAt still bounding size.
+        val routed =
+          if (isPrimaryKeyTable && partitionBy.nonEmpty)
+            merged.repartition(partitionBy.map(col).toIndexedSeq: _*)
+          else merged
+        stageFiles(routed, sch, partitionBy, level, rollAt) -> level
       }
-    // Co-locate each (partition, bucket) in one task before the staged
-    // write (r17, guide §6): `merged` otherwise keeps its upstream
-    // partitioning and partitionBy fans every task out across every
-    // bucket directory — up to tasks×buckets near-empty files per
-    // compaction (observed 32×8 at gate scale), which every later read
-    // pays as split count. Hash repartition on the partitionBy columns
-    // (no explicit N → AQE coalesces; deterministic under retry) yields
-    // one file per (partition, bucket) with rollAt still bounding size.
-    val routed =
-      if (isPrimaryKeyTable && partitionBy.nonEmpty)
-        merged.repartition(partitionBy.map(col).toIndexedSeq: _*)
-      else merged
-    try Some(commitFiles(routed, sch, partitionBy, KindCompact, base,
-      commitIdentifier = -1L, deletes = old.map(_.copy(kind = "DELETE")),
-      level = 1, changelogManifest = changelog, maxRecordsPerFile = rollAt))
-    finally if (changelog.isDefined) merged.unpersist()
+      Some(commitStagedDir(staged, sch, KindCompact, base,
+        commitIdentifier = -1L, _ => old.map(_.copy(kind = "DELETE")),
+        changelogManifest = changelog))
+    } finally if (changelog.isDefined) fullMerge.foreach(_._2.unpersist())
   }
+
+  /** The rows compaction writes for `files`. A primary-key merge keeps
+    * _graft_seq/_graft_kind; only a `full` (level-1) merge drops the
+    * -D/-U winners and expired rows (reference: MergeTreeCompactManager
+    * drops deletes only at the highest level), since a partial run may
+    * sit above an older run that still holds the key. */
+  private def compactedRows(
+      files: Seq[ManifestEntry], sch: TableSchema, full: Boolean): DataFrame =
+    if (!isPrimaryKeyTable) readAppendData(files) // applies deletion vectors
+    else {
+      val m0 = MergeEngine.mergeKeepMeta(readRaw(files), sch)
+      val m =
+        if (!full) m0
+        // -U winners are retractions too (see MergeEngine.merge) —
+        // rewriting one as +I would make the phantom row permanent
+        else {
+          val live = m0.filter(col(KindCol) =!= KindDelete &&
+            col(KindCol) =!= KindUpdateBefore)
+          // record-level TTL drops expired rows from the rewrite; with
+          // changelog-producer=full-compaction the state diff then emits
+          // their -D rows, so incremental readers see the expiry
+          recordExpireKeep(sch).map(live.filter).getOrElse(live)
+            .withColumn(KindCol, lit(KindInsert).cast("byte"))
+        }
+      if (sch.isDynamicBucket) {
+        // a key's bucket is index-assigned, not hash-derived: carry
+        // it through the rewrite (merge engines that drop __bucket
+        // get it re-joined from the raw rows)
+        val pk = sch.primaryKeys
+        if (m.columns.contains("__bucket")) m
+        else {
+          val bucketOf = readRaw(files)
+            .groupBy(pk.map(col).toIndexedSeq: _*)
+            .agg(max(col("__bucket")).as("__bucket"))
+          m.join(bucketOf, pk, "left")
+        }
+      } else m.withColumn("__bucket",
+        // postpone tables: compaction is WHERE bucket assignment
+        // happens — the staged bucket=-2 rows hash into
+        // postpone.default-bucket-num real buckets here (postpone
+        // forbids bucket-key, so bucketKeys = pk there; rescale of a
+        // bucket-key table re-routes by the SAME columns the writer
+        // used)
+        pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
+          lit(sch.effectiveBuckets)).cast("int"))
+    }
 
   def expireSnapshots(retain: Int): Seq[Long] = sm.expireSnapshots(retain)
 
@@ -5867,7 +5887,7 @@ final class GraftTable private (
         Files.deleteIfExists(Paths.get(staging))
       } catch { case _: Exception => () }
       id
-    } else commitStagedDir(staging, sch, KindOverwrite, nextSeq(),
+    } else commitStagedDir(Seq(staging -> 0), sch, KindOverwrite, nextSeq(),
       commitIdentifier = -1L, _ => replaced.map(_.copy(kind = "DELETE")))
   }
 
@@ -6278,21 +6298,17 @@ final class GraftTable private (
       }.toDF("consumer_id", "next_snapshot")
   }
 
-  /** `$indexes`: every index structure the latest snapshot pins —
-    * snapshot-level sidecars (dynamic-bucket, cross-partition global,
-    * global secondary) and per-file bloom/bitmap/bsi sidecars
-    * (reference role: table/system/TableIndexesTable). */
-  /** `$ro` (read-optimized): the latest snapshot restricted to
-    * compacted files (level ≥ 1) — query-speed-over-freshness for PK
-    * tables: level-1 generations are fully merged by compaction, so
-    * readers skip recent level-0 deltas AND their merge cost. Append
-    * tables have no merge debt; `$ro` equals the normal read
-    * (reference: table/system/ReadOptimizedTable.java — "read the
-    * files of the highest level only"). */
+  /** `$ro` (read-optimized): the latest snapshot restricted to the
+    * fully merged level-1 files — query-speed-over-freshness for PK
+    * tables: readers skip the level-0 deltas, the partial runs on
+    * levels 2..N AND their merge cost. Append tables have no merge
+    * debt; `$ro` equals the normal read (reference:
+    * table/system/ReadOptimizedTable.java — "read the files of the
+    * highest level only"). */
   def systemReadOptimized: DataFrame = {
     if (!isPrimaryKeyTable) return read
     val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-    mergedFromEntries(entries.filter(_.file.level >= 1))
+    mergedFromEntries(entries.filter(_.file.level == 1))
   }
 
   /** `$aggregation_fields`: each field's aggregate function under the
@@ -6322,16 +6338,17 @@ final class GraftTable private (
     * lineage as a queryable view). */
   def systemRowTracking: DataFrame = readWithRowIds()
 
-  /** `$compact_buckets`: per (partition, bucket) file pressure against
-    * the num-sorted-run trigger — which buckets the next
-    * compactIfNeeded would rewrite (reference:
+  /** `$compact_buckets`: per (partition, bucket) file count and
+    * whether `compactIfNeeded(trigger)` would compact it — the same
+    * per-bucket decision (reference:
     * table/system/CompactBucketsTable.java). */
   def systemCompactBuckets(trigger: Int = 5): DataFrame = {
     import spark.implicits._
     val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-    entries.groupBy(e => (e.partition, e.bucket)).map { case ((p, b), es) =>
+    val picks = compactionPicks(entries, trigger)
+    entries.groupBy(e => (e.partition, e.bucket)).map { case (pb @ (p, b), es) =>
       (p.map { case (k, v) => s"$k=$v" }.mkString("/"), b,
-        es.size.toLong, es.size > trigger)
+        es.size.toLong, picks(pb).isDefined)
     }.toSeq.toDF("partition", "bucket", "file_count", "compaction_needed")
   }
 
@@ -6355,6 +6372,10 @@ final class GraftTable private (
     rows.toDF("snapshot_id", "partition", "bucket", "before_files", "data_files")
   }
 
+  /** `$indexes`: every index structure the latest snapshot pins —
+    * snapshot-level sidecars (dynamic-bucket, cross-partition global,
+    * global secondary) and per-file bloom/bitmap/bsi sidecars
+    * (reference role: table/system/TableIndexesTable). */
   def systemIndexes: DataFrame = {
     import spark.implicits._
     val snap = sm.latestSnapshot()
@@ -6720,7 +6741,7 @@ object GraftTable {
       Files.createDirectories(dst.getParent)
       Files.copy(f, dst)
     }
-    t.commitStagedDir(staging, t.schema, KindAppend,
+    t.commitStagedDir(Seq(staging -> 0), t.schema, KindAppend,
       seqBase = 0L, commitIdentifier = -1L, _ => Seq.empty)
     t
   }
@@ -6815,7 +6836,7 @@ object GraftTable {
       Files.createDirectories(dst.getParent)
       Files.copy(f, dst)
     }
-    t.commitStagedDir(staging, t.schema, KindAppend,
+    t.commitStagedDir(Seq(staging -> 0), t.schema, KindAppend,
       seqBase = 0L, commitIdentifier = -1L, _ => Seq.empty)
     t
   }

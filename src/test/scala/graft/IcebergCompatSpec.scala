@@ -165,6 +165,32 @@ class IcebergCompatSpec extends AnyFunSuite {
     assert(own.exceptAll(external).count() == 0)
   }
 
+  test("primary-key table: partial compaction runs stay unexposed, stamped by the last full compaction") {
+    val psch = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("v", LongType, nullable = true)))
+    def pdf(rows: (Long, Long)*) =
+      spark.createDataFrame(rows.map(r => Row(r._1, r._2)).asJava, psch)
+    val t = GraftTable.create(spark, tmp(), psch,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "1"))
+    t.write(pdf((1L to 300L).map(i => (i, i)): _*))
+    val full = t.compact().get
+    def live = t.sm.latestSnapshot().map(t.sm.liveEntries).get
+    val level1 = live.map(_.file.fileName).toSet
+    t.write(pdf((1L, 100L)))
+    t.write(pdf((2L, 200L)))
+    assert(t.compactIfNeeded(trigger = 1).isDefined)
+    assert(live.exists(_.file.level >= 2), "expected a partial run")
+    IcebergCompat.sync(t)
+    val exposed = icebergDataFiles(t.path).map(p => p.substring(p.lastIndexOf("/data/") + 1))
+    assert(exposed.toSet == level1)
+    val metaDir = s"${t.path}/metadata"
+    val version = new String(Files.readAllBytes(
+      Paths.get(s"$metaDir/version-hint.text"))).trim
+    val md = new String(Files.readAllBytes(Paths.get(s"$metaDir/v$version.metadata.json")))
+    assert(md.contains(s""""current-snapshot-id":$full,"""), md)
+  }
+
   test("partitioned PK table after schema evolution exports merged state") {
     val psch = StructType(Seq(
       StructField("k", LongType, nullable = false),

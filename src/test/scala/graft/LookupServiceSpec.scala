@@ -103,6 +103,27 @@ class LookupServiceSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll
     assert(get(4L).map(_.getString(1)) == Seq("u4"))
   }
 
+  test("lookup map cache: small files stay cached beside an over-cap file") {
+    val t = GraftTable.create(spark, s"$warehouse/db/mixedt", sch,
+      primaryKeys = Seq("id"),
+      options = Map("bucket" -> "1", "lookup.cache-max-file-rows" -> "10"))
+    t.write(spark.createDataFrame(
+      (0L until 30L).map(i => Row(i, s"u$i", i * 1.0)).asJava, sch)) // over the cap
+    t.write(spark.createDataFrame(
+      Seq(Row(5L, "u5-new", 5.5), Row(40L, "u40", 4.0)).asJava, sch))
+    def get(id: Long): Seq[Row] = {
+      val local = t.localLookup(Map("id" -> id))
+      assert(local == t.lookup(Map("id" -> id)).collect().toSeq, s"id=$id")
+      local
+    }
+    assert(get(5L).map(_.getString(1)) == Seq("u5-new"))
+    val (hits0, misses0) = (t.lookupCacheHits.get, t.lookupCacheMisses.get)
+    assert(get(5L).map(_.getString(1)) == Seq("u5-new"))
+    assert(get(7L).map(_.getString(1)) == Seq("u7"))
+    assert(t.lookupCacheHits.get >= hits0 + 2, "the small file answers from its map")
+    assert(t.lookupCacheMisses.get == misses0)
+  }
+
   test("lookup runs zero Spark jobs (driver-local fast path)") {
     seed()
     val sc = spark.sparkContext

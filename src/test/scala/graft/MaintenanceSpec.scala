@@ -336,7 +336,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val before = t.systemFiles.collect().map(r => (r.getInt(2), r.getString(0)))
     val hotBucket = before.groupBy(_._1).maxBy(_._2.length)._1
     assert(before.count(_._1 == hotBucket) > 5)
-    assert(t.compactIfNeeded(trigger = 5).isDefined)
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t, 5).isDefined)
     val after = t.systemFiles.collect().map(r => (r.getInt(2), r.getString(0)))
     assert(after.count(_._1 == hotBucket) == 1, "hot bucket compacted to one file")
     // cool buckets' files untouched (same physical files)
@@ -345,7 +345,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(coolBefore == coolAfter)
     // data intact; second call is a no-op
     assert(t.read.filter(col("k") === hotKey).head.getLong(1) == 7L)
-    assert(t.compactIfNeeded(trigger = 5).isEmpty)
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t, 5).isEmpty)
   }
 
   test("snapshot.expire.limit bounds one expire pass; later passes drain the rest") {
@@ -381,19 +381,19 @@ class MaintenanceSpec extends AnyFunSuite {
     t.write(df(0 until 5000, "big"))
     val entriesBefore = t.sm.latestSnapshot().map(t.sm.liveEntries).get
     assert(entriesBefore.size == 2)
-    assert(t.compactIfNeeded(trigger = 5).isDefined,
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t, 5).isDefined,
       "size amplification must trigger despite low file count")
     val after = t.sm.latestSnapshot().map(t.sm.liveEntries).get
     assert(after.forall(_.file.level > 0) && t.read.count() == 5000L)
     // small churn on the merged state: neither count nor size fires
     t.write(df(0 until 3, "tiny"))
-    assert(t.compactIfNeeded(trigger = 5).isEmpty)
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t, 5).isEmpty)
     // compaction.min.file-num overrides the caller's count trigger
     val t2 = GraftTable.create(spark, tmp(), sch,
       primaryKeys = Seq("k"),
       options = Map("bucket" -> "1", "compaction.min.file-num" -> "2"))
     (0 until 3).foreach(i => t2.write(df(i * 10 until i * 10 + 5, s"w$i")))
-    assert(t2.compactIfNeeded(trigger = 10).isDefined,
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t2, 10).isDefined,
       "3 files > min.file-num=2 must fire even with caller trigger 10")
   }
 

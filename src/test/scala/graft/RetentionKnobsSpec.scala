@@ -100,11 +100,11 @@ class RetentionKnobsSpec extends AnyFunSuite {
       options = Map("bucket" -> "1",
         "num-sorted-run.compaction-trigger" -> "2"))
     t.write(Seq((1L, "a")).toDF("k", "v"))
-    assert(t.compactIfNeeded().isEmpty, "one run must not trigger")
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t).isEmpty, "one run must not trigger")
     t.write(Seq((2L, "b")).toDF("k", "v"))
     // two level-0 runs >= trigger 2, even though file count (2) is far
     // below the default min.file-num trigger (5)
-    assert(t.compactIfNeeded().isDefined)
+    assert(UniversalCompactionSpec.compactIfNeededChecked(t).isDefined)
     val files = t.sm.latestSnapshot().map(t.sm.liveEntries).get
     assert(files.forall(_.file.level > 0))
   }

@@ -255,7 +255,7 @@ class ScanOptionsSpec extends AnyFunSuite {
     small.write(Seq((1L, "a")).toDF("k", "v"))
     small.write(Seq((2L, "b")).toDF("k", "v"))
     // 2 tiny files, far below count triggers -> total-size fires
-    assert(small.compactIfNeeded().isDefined)
+    assert(UniversalCompactionSpec.compactIfNeededChecked(small).isDefined)
 
     // append table: DELETE takes the deletion-vector tier, so the
     // dv-cardinality ratio is observable (PK deletes write -D rows)
@@ -267,7 +267,7 @@ class ScanOptionsSpec extends AnyFunSuite {
         "compaction.delete-ratio-threshold" -> "0.3"))
     dv.write((1L to 10L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1))
     dv.delete(org.apache.spark.sql.functions.expr("k <= 4")) // 40% via DV
-    assert(dv.compactIfNeeded().isDefined, "40% > 0.3 must trigger")
+    assert(UniversalCompactionSpec.compactIfNeededChecked(dv).isDefined, "40% > 0.3 must trigger")
     val after = dv.sm.latestSnapshot().map(dv.sm.liveEntries).get
     assert(after.forall(_.file.dvFile.isEmpty), "rewrite drops the DVs")
     assert(dv.read.count() == 6)
